@@ -807,1001 +807,12 @@ def asof_latest_order_before_event(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-#: Driver-sampling priority (VERDICT r01 item 8): the driver checks a
-#: PREFIX of this registry (r01: exactly the first 50), so iteration
-#: order decides which operators get a driver-green hash row. This
-#: prefix is hand-ordered to cover every SURVEY §2.1–§2.8 row with an
-#: ORACLE-BACKED query (operator IDs noted); function batteries and
-#: redundant variants follow, and rows-only queries (no SQL oracle →
-#: only a weaker rows-check possible) sort last.
+#: Driver-sampling priority (VERDICT r01 item 8): the driver checks
+#: exactly the first 50 names of ``all_queries()``, so this head decides
+#: which queries get a driver-green hash row. Every name must be
+#: oracle-backed. ``scripts/driver_staleness.py`` documents how the head
+#: is composed and prints the ledger to rebuild it from.
 CORE_PREFIX = [
-    "elb_pipeline_hourly",              # §2.1 S1-S8 + §2.2 P1-P16 + §2.3 + J1/J2/J4 + A1-A7 composed
-    "pricing_summary",                  # A1,A2,A4,A6,A7 + F5 scan pruning
-    "revenue_by_nation",                # J1 broadcast join flagship
-    "top_orders_by_revenue",            # top-k orderBy/limit
-    "order_priority_semi_join",         # semi join
-    "customers_without_orders_anti_join",  # J2 anti join
-    "customer_order_distribution",      # A2 vs A8 count semantics
-    "top3_customers_per_nation",        # W7 ranking window
-    "running_order_total",              # W4 cumsum
-    "event_lag_diff",                   # W2 lag-diff
-    "sessionize_events",                # W1-W4 + P19 session ids
-    "rolling_5min_event_count",         # W5 range frame
-    "rolling_1h_avg_value",             # W6 range frame
-    "latest_event_per_user",            # J4/W7 keep-latest dedup
-    "hourly_event_aggregate",           # P15 time features + A1-A7
-    "status_bucket_case_when",          # P13 CASE buckets
-    "batch_session_window_stats",       # session_window (streaming primitive, batch)
-    "json_extract_events",              # from_json over events.props
-    "rollup_acctbal_by_region_nation",  # ROLLUP grouping sets
-    "set_ops_customer_cohorts",         # §2.7 union/intersect/except
-    "orders_above_avg_scalar_subquery", # scalar subquery
-    "asof_latest_order_before_event",   # custom as-of join
-    "full_outer_nation_presence",       # full outer join
-    "cross_join_region_priority",       # cross join
-    "orders_above_customer_avg",        # correlated subquery
-    "event_neighbors",                  # lead/lag value windows
-    "order_price_quartiles",            # A5 exact quartiles
-    "value_percentiles_by_type",        # exact percentile battery
-    "extreme_events_by_type",           # F3 IN-list filter
-    "large_orders_having",              # F1 + HAVING
-    "promo_revenue_disjunctive_filter", # F2 disjunctive predicates
-    "salted_user_event_totals",         # skew salting
-    "zscore_outlier_events",            # §2.9 applyInPandas extension point
-    "zscore_outlier_events_builtin",    # same semantics, pure-JVM window twin
-    "cogroup_user_activity",            # §2.9 cogrouped map
-    "pivot_event_type_counts",          # pivot
-    "user_activity_calendar",           # calendar matrix
-    "multimodal_decode_stats",          # multimodal binary columns
-    "multimodal_sniff_stats",           # real PNG bytes → header sniff
-    "streaming_sessionize_events",      # §2.8 session_window stream
-    "streaming_hourly_counts",          # §2.8 tumbling window
-    "streaming_view_purchase_join",     # §2.8 stream-stream-shape join
-    "streaming_static_nation_counts",   # §2.8 stream-static broadcast join
-    "exact_dedup_documents",            # LLM tier: exact hash dedup
-    "minhash_lsh_near_dup",             # LLM tier: MinHash+LSH
-    "ngram_jaccard_near_dup",           # LLM tier: n-gram Jaccard
-    "simhash_near_dup",                 # LLM tier: SimHash
-    "embedding_near_dup_pairs",         # LLM tier: embedding cosine near-dup
-    "cosine_topk_bruteforce",           # LLM tier: ANN exact baseline
-    "token_count_documents",            # LLM tier: token counting
-    "text_quality_scores",              # LLM tier: quality scoring
-    # --- past the r01 sample size; still ordered by coverage value ---
-    "duplicated_span_coverage",         # LLM tier: sliding-window exact-substring dedup
-    "leakage_safe_split_audit",         # LLM tier: cluster-granular split + tearing audit
-    "padding_waste_audit",              # LLM tier: batching padding waste, two-pass global rank
-    "incremental_ingest_dedup",         # LLM tier: batch-vs-index dedup, semi-join probe
-    "streaming_ingest_dedup_stats",     # §2.8 + LLM tier: persisted-index streaming dedup
-    "dim_truncation_recall",            # LLM tier: Matryoshka truncation audit
-    "pmi_collocations",                 # LLM tier: collocation mining
-    "training_export_pipeline",         # LLM tier capstone: dedup -> filter -> pack e2e
-    "expectations_audit",               # data-contract audit
-    "cube_status_priority",             # CUBE grouping sets
-    "lateral_top2_customers",           # LATERAL correlated subquery
-    "geo_cell_density",                 # geo tier: grid binning
-    "nearest_dc_assignment",            # geo tier: haversine argmin
-    "geo_hotspot_clusters",             # geo tier: grid-DBSCAN via CC
-    "hinted_join_strategies",           # join-strategy hints
-    "schema_drift_union_stats",         # unionByName allowMissingColumns
-    "langid_confusion",                 # LLM tier: language id
-    "doc_fingerprint_summary",          # LLM tier: fingerprinting
-    "decontamination_overlap",          # curation tier
-    "bloom_decontamination_audit",      # curation tier: fixed-memory bloom
-    "chunk_dedup_stats",
-    "unigram_logprob_quality",
-    "token_budget_topp",
-    "token_entropy_quality",            # quality tier: Shannon entropy fold
-    "naive_bayes_langid_confusion",     # learned-classifier inference tier
-    "streaming_dedup_distinct_users",   # §2.8 dropDuplicatesWithinWatermark
-    "streaming_dedup_hourly_active_users",  # §2.8 chained stateful (dedup→agg)
-    "events_within_5min_pairs",         # range join
-    "hierarchical_time_rollup",
-    "deterministic_uniform_sample",     # sampling tier: portable-hash membership
-    "stratified_sample_audit",          # sampling tier: per-stratum rates, one pass
-    "leakproof_customer_split",         # sampling tier: entity-granular split + audit
-    "per_nation_deterministic_sample",  # sampling tier: per-group k-sample
-    "pii_redaction_audit",              # privacy tier: detect+mask, digest-verified
-    "k_anonymity_audit",                # privacy tier: QI group-size risk
-    "jsonl_roundtrip_stats",            # §2.1 JSON sink/source lossless round-trip
-    "snapshot_diff_orders",             # CDC snapshot reconciliation (full-outer + digest)
-    "format_matrix_roundtrip",          # §2.1 ORC + CSV source/sink lossless round-trip
-    "incremental_hourly_rollup",        # cron pattern done right: mergeable-state upserts
-    "partition_backfill_stats",         # idempotent dynamic partition overwrite
-    "bucketed_join_agg",                # co-bucketed fact-fact join, no Exchange
-    # statistical monitoring / experimentation tier (plans/queries_stats.py)
-    "ab_welch_ttest",                   # Welch two-sample t per event_type
-    "cuped_adjusted_lift",              # CUPED variance-reduced experiment readout
-    "ewma_control_chart",               # exact bit-shift EWMA + deviation alerts
-    "cusum_changepoint",                # closed-form CUSUM via running min
-    "seasonal_naive_backtest",          # dense-spine 24h forecast backtest
-    "benford_first_digit_audit",        # first-digit chi-square audit
-    "pareto_concentration",             # n-for-80% + top-decile share (integer bp)
-    "user_survival_curve",              # empirical survival in basis points
-    "gini_concentration",               # per-nation Gini over exact cents
-    "embedding_dim_profile",            # per-dim moments via decimal explode-agg
-    "ols_order_value_regression",       # normal-equation OLS, shared Cramer solve
-    "streaming_view_purchase_outer",    # outer interval join, eviction nulls
-    "lpa_communities",                  # unrolled-oracle label propagation
-    "value_drift_audit",                # exact-integer TV drift histogram
-    "multi_horizon_backtest",           # 1h/24h/168h lag-baseline scoreboard
-    "shingle_containment_pairs",        # asymmetric-overlap subset dedup
-    "mann_whitney_u",                   # nonparametric A/B, exact midranks
-    "kruskal_wallis_value_by_type",     # k-sample rank test, bucketed ranks
-    "srm_balance_audit",                # sample-ratio-mismatch guardrail
-    "ab_conversion_ztest",              # two-proportion conversion z
-    "streaming_timeout_sessions",       # event-time-timer sessionization
-]
-
-# Driver-sampling priority rebalance (driver round 2): the driver's
-# correctness gate samples a PREFIX of this ordering (round 1 checked
-# exactly the first 50), and every §2 operator shape already banked a
-# driver-green row there — so one representative of each round-2 tier
-# is promoted into the first 50, displacing shape-redundant round-1
-# entries (each displaced query keeps its local oracle test and stays
-# in the list, just later).
-_R2_PROMOTED = [
-    "partition_backfill_stats",        # §2.1 dynamic partition overwrite
-    "bucketed_join_agg",               # storage-layout co-bucketed join
-    "ab_welch_ttest",                  # experimentation tier
-    "ewma_control_chart",              # monitoring tier (exact EWMA)
-    "pareto_concentration",            # concentration tier (integer bp)
-    "ols_order_value_regression",      # normal-equation OLS
-    "value_drift_audit",               # drift tier (integer TV)
-    "embedding_dim_profile",           # linalg tier
-    "lpa_communities",                 # community detection
-    "streaming_view_purchase_outer",   # outer stream-stream join
-]
-_R2_DEMOTED = {
-    # each covered by a same-shape survivor in the first 50:
-    "event_neighbors",                 # lag/lead ~ event_lag_diff
-    "orders_above_customer_avg",       # ~ orders_above_avg_scalar_subquery
-    "cross_join_region_priority",      # cross join (banked r01)
-    "user_activity_calendar",          # calendar spine ~ backtest spines
-    "multimodal_sniff_stats",          # ~ multimodal_decode_stats
-    "value_percentiles_by_type",       # ~ order_price_quartiles
-    "batch_session_window_stats",      # ~ sessionize + streaming_sessionize
-    "status_bucket_case_when",         # CASE shape (banked r01)
-    "json_extract_events",             # JSON path shape (banked r01)
-    "set_ops_customer_cohorts",        # set ops (banked r01)
-}
-_head = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R2_DEMOTED and n not in _R2_PROMOTED
-]
-_rest = [n for n in CORE_PREFIX if n not in _head and n not in _R2_PROMOTED]
-CORE_PREFIX = _head + _R2_PROMOTED + _rest
-
-# Round-3 rebalance: rotate one green representative from each tier
-# that has NEVER had a driver CORRECTNESS row (privacy, sampling, geo,
-# time-series, quality/profiling, text-retrieval, curation, rank
-# statistics, timer-driven streaming, CDC) into the driver-sampled
-# prefix. Displaced entries are all banked driver-green in r01/r02 AND
-# shape-covered by a survivor; they keep their local oracle tests.
-_R3_PROMOTED = [
-    "pii_redaction_audit",             # privacy tier
-    "leakproof_customer_split",        # sampling tier (entity-granular split)
-    "geo_hotspot_clusters",            # geo tier (grid-DBSCAN via CC)
-    "scd2_user_event_intervals",       # time-series tier (SCD2 intervals)
-    "referential_integrity_audit",     # quality/profiling tier
-    "bm25_top_docs",                   # text-retrieval tier
-    "sequence_packing_stats",          # curation tier
-    "mann_whitney_u",                  # rank-statistics tier
-    "streaming_timeout_sessions",      # event-time-timer streaming
-    "snapshot_diff_orders",            # CDC tier (changed r03: negated keys)
-    "elb_error_report",                # reference error report (new r03)
-]
-_R3_DEMOTED = {
-    # each banked driver-green (r01 and/or r02) + shape-covered:
-    "top_orders_by_revenue",           # top-k (banked r01+r02)
-    "order_priority_semi_join",        # semi join (banked r01+r02)
-    "running_order_total",             # W4 cumsum ~ sessionize_events
-    "event_lag_diff",                  # W2 lag ~ sessionize_events
-    "rolling_1h_avg_value",            # ~ rolling_5min_event_count
-    "zscore_outlier_events_builtin",   # JVM twin of zscore_outlier_events
-    "streaming_view_purchase_join",    # inner sibling of the outer survivor
-    "extreme_events_by_type",          # IN-list (banked r01+r02)
-    "large_orders_having",             # HAVING (banked r01+r02)
-    "promo_revenue_disjunctive_filter",  # disjunctive filter (banked r02)
-    "full_outer_nation_presence",      # full outer (banked r02; shape also
-                                       # in the promoted snapshot_diff_orders)
-}
-_head3 = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R3_DEMOTED and n not in _R3_PROMOTED
-]
-_rest3 = [n for n in CORE_PREFIX if n not in _head3 and n not in _R3_PROMOTED]
-CORE_PREFIX = _head3 + _R3_PROMOTED + _rest3
-
-# Round-3b: the physical-layout / cost-estimation tier
-# (plans/queries_layout.py) plus the chi-square and temporal-split
-# additions are NEW this round, so no driver row exists for any of
-# them; promote six representatives so CORRECTNESS_r03 exercises the
-# tier, displacing banked driver-green shapes (each keeps its local
-# oracle test and stays later in the list).
-_R3B_PROMOTED = [
-    "zorder_layout_audit",              # multi-dim clustering audit
-    "join_cardinality_estimate",        # sampled pre-join CBO check
-    "mergeable_histogram_quantiles",    # algebraic sketch-state rollup
-    "chi_square_independence",          # contingency independence test
-    "incremental_join_rollup",          # delta-propagation IVM
-    "write_audit_publish_stats",        # transactional WAP publish
-]
-_R3B_DEMOTED = {
-    # each banked driver-green in r01 and/or r02 + shape-covered:
-    "customers_without_orders_anti_join",  # J2 anti join (banked r01+r02)
-    "customer_order_distribution",      # A2/A8 counts (banked r01+r02)
-    "pivot_event_type_counts",          # pivot (banked r01+r02)
-    "rollup_acctbal_by_region_nation",  # ROLLUP (banked r01+r02)
-    "cogroup_user_activity",            # §2.9 cogroup (banked r02)
-    "salted_user_event_totals",         # skew salting (banked r01)
-}
-_head3b = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R3B_DEMOTED and n not in _R3B_PROMOTED
-]
-_rest3b = [n for n in CORE_PREFIX if n not in _head3b and n not in _R3B_PROMOTED]
-CORE_PREFIX = _head3b + _R3B_PROMOTED + _rest3b
-
-# Round-3c: four more never-driver-checked representatives from the
-# late round-3 additions (anti-entropy reconciliation, streaming-ops
-# lateness profiling, exact-at-scale order statistics, GDPR erasure),
-# displacing shapes that are banked driver-green in BOTH r01 and r02
-# and remain covered by same-shape survivors in the head.
-_R3C_PROMOTED = [
-    "segment_digest_reconcile",         # Merkle anti-entropy locator
-    "watermark_lateness_profile",       # bucketed running max, streaming ops
-    "exact_median_two_pass",            # exact order stats, no global sort
-    "forget_entity_audit",              # cross-table erasure proof
-]
-_R3C_DEMOTED = {
-    "latest_event_per_user",            # keep-latest (banked r01+r02;
-                                        # shape also in snapshot_diff)
-    "rolling_5min_event_count",         # range frame (banked r01+r02)
-    "minhash_lsh_near_dup",             # MinHash-LSH (banked r01+r02;
-                                        # near-dup tier keeps 4 reps in head)
-    "token_count_documents",            # token counts (banked r01+r02)
-}
-_head3c = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R3C_DEMOTED and n not in _R3C_PROMOTED
-]
-_rest3c = [n for n in CORE_PREFIX if n not in _head3c and n not in _R3C_PROMOTED]
-CORE_PREFIX = _head3c + _R3C_PROMOTED + _rest3c
-
-
-# Round-4 rebalance (VERDICT r03 item 3): 19 promotions — the two
-# queries whose plans changed this round (knn_label_agreement's
-# broadcast-side fix rides next to the already-promoted
-# exact_median_two_pass) plus 18 never-driver-checked representatives
-# from tiers with zero driver rows: the reference's second CSV report
-# (elb_bot_report, NEW), sink/format matrix, sketches, graph/pagerank,
-# sampling, SQL-surface LATERAL, data contracts, the curation capstone
-# and its DSIR/SemDeDup siblings, profiling, time-series gap-fill,
-# retention, funnels, privacy l-diversity, column encryption, range
-# joins, and heavy hitters. Displaced entries are banked driver-green
-# in 2-3 prior rounds AND shape-covered by a survivor; every one keeps
-# its local oracle test.
-_R4_PROMOTED = [
-    "knn_label_agreement",              # changed r04: broadcast side flipped
-    "elb_bot_report",                   # NEW: reference bot report (F4+A8)
-    "format_matrix_roundtrip",          # §2.1 ORC/CSV round-trip
-    "count_min_sketch_audit",           # sketch tier
-    "nation_trade_pagerank",            # graph tier: pagerank
-    "stratified_sample_audit",          # sampling tier: per-stratum rates
-    "lateral_top2_customers",           # SQL surface: LATERAL subquery
-    "expectations_audit",               # data-contract audit
-    "training_export_pipeline",         # curation capstone e2e
-    "vocab_growth_audit",               # profiling: exact vocab growth
-    "gapfill_locf_hourly",              # time-series: LOCF gap fill
-    "cohort_retention_matrix",          # retention matrix
-    "funnel_view_click_purchase",       # ordered funnel
-    "dsir_importance_weights",          # curation: DSIR weighting
-    "semdedup_survivors",               # curation: SemDeDup
-    "l_diversity_audit",                # privacy: l-diversity
-    "column_encryption_roundtrip",      # AES column round-trip
-    "range_lookup_join",                # range-predicate join
-    "heavy_hitter_tokens",              # misra-gries-style heavy hitters
-    "simhash_weighted_near_dup",        # NEW r04: IDF-weighted simhash
-    "simhash_block_bias_audit",         # NEW r04: scheme-choice audit
-    "streaming_neardup_ingest_stats",   # NEW r04: LSH band-index ingest
-    "multimodal_image_resize_stats",    # NEW r04: real decode→box-resize→
-                                        # decode (supersets the PNG
-                                        # round-trip, which stays local)
-    "multimodal_audio_frame_features",  # NEW r04: real decode→framing
-                                        # energy/ZCR (supersets the WAV
-                                        # round-trip, which stays local)
-    "multimodal_video_frame_sample_stats",  # NEW r04: real Y4M demux + sampling
-]
-_R4_DEMOTED = {
-    # banked driver-green r01+r02+r03, shape-covered by survivors:
-    "pricing_summary",                  # agg battery ~ elb_pipeline_hourly
-    "revenue_by_nation",                # J1 broadcast ~ elb_pipeline (still entry())
-    "top3_customers_per_nation",        # W7 rank ~ lateral_top2_customers
-    "sessionize_events",                # sessions ~ streaming_timeout_sessions
-    "hourly_event_aggregate",           # P15+aggs ~ elb_pipeline_hourly
-    "orders_above_avg_scalar_subquery", # scalar subquery ~ lateral
-    "asof_latest_order_before_event",   # as-of ~ range_lookup_join
-    "order_price_quartiles",            # exact quartiles ~ exact_median_two_pass
-    "zscore_outlier_events",            # applyInPandas ~ grouped pandas kept local
-    "multimodal_decode_stats",          # multimodal (banked 3 rounds)
-    "streaming_sessionize_events",      # ~ streaming_timeout_sessions
-    "streaming_hourly_counts",          # ~ watermark_lateness_profile
-    "embedding_near_dup_pairs",         # ~ semdedup_survivors + simhash
-    # banked r02+r03, shape-covered:
-    "streaming_static_nation_counts",   # ~ streaming_view_purchase_outer
-    "cosine_topk_bruteforce",           # same operator inside knn_label_agreement
-    "ngram_jaccard_near_dup",           # near-dup tier keeps simhash + exact_dedup
-    "ewma_control_chart",               # stats tier keeps chi_square + mann_whitney
-    "pareto_concentration",             # ~ gini/survival shapes kept local
-    "value_drift_audit",                # drift ~ chi_square_independence
-    "streaming_view_purchase_outer",    # banked r02+r03; streaming keeps
-                                        # timeout_sessions + lateness_profile
-    "bucketed_join_agg",                # banked r02+r03; Exchange-free join
-                                        # pinned by its plan test
-    "snapshot_diff_orders",             # banked r03; CDC shape covered by
-                                        # segment_digest_reconcile survivor
-    "mergeable_histogram_quantiles",    # banked r03; layout tier keeps
-                                        # zorder + join_cardinality reps
-    "incremental_join_rollup",          # banked r03; IVM shape kin to the
-                                        # write_audit_publish survivor
-    "chi_square_independence",          # banked r03; stats tier keeps
-                                        # mann_whitney + exact_median reps
-}
-_head4 = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R4_DEMOTED and n not in _R4_PROMOTED
-]
-_rest4 = [n for n in CORE_PREFIX if n not in _head4 and n not in _R4_PROMOTED]
-CORE_PREFIX = _head4 + _R4_PROMOTED + _rest4
-
-# Round-5 rebalance (VERDICT r04 item 2: 150/265 queries still have
-# zero driver rows — keep rotating). 26 promotions: the new
-# batch/stream-parity pipeline query, every never-sampled standout the
-# verdict named, the two `weak`-marked queries (rfm_segment_counts,
-# shard_rebalance_audit — a driver hash row plus the isolated re-time
-# closes them), the borderline seasonal_residual_anomalies, and
-# never-sampled representatives of tiers whose head reps are all
-# banked (function batteries, sampling, geo, §2.8 sliding window,
-# §2.9 grouped-agg/UDTF, sinks). streaming_neardup_ingest_stats stays
-# in the head unpromoted because its upsert was REWRITTEN this round
-# (replay safety) and must re-verify. Displaced entries are banked
-# driver-green in 2-3 prior rounds (or shape-covered by a promoted
-# sibling) and every one keeps its local oracle test.
-_R5_PROMOTED = [
-    "streaming_elb_pipeline_hourly",    # NEW r05: batch/stream parity on the
-                                        # reference's own workload
-    "cosine_topk_lsh",                  # ANN: sign-LSH (verdict-named)
-    "winnowing_collision_pairs",        # fingerprinting (verdict-named)
-    "duplicated_span_coverage",         # span dedup (verdict-named)
-    "bloom_decontamination_audit",      # fixed-memory bloom (verdict-named)
-    "gopher_quality_battery",           # quality battery (verdict-named)
-    "tfidf_top_terms",                  # fused TF-IDF (verdict-named)
-    "padding_waste_audit",              # batching waste (verdict-named)
-    "multimodal_pixel_roundtrip_stats", # PNG codec rung (verdict-named)
-    "multimodal_wav_roundtrip_stats",   # WAV codec rung (verdict-named)
-    "multimodal_video_motion_stats",    # Y4M frame-SAD rung (verdict-named)
-    "udtf_token_spans",                 # §2.9 UDTF (verdict-named)
-    "grouped_agg_pandas_gmean",         # §2.9 pandas grouped agg
-    "jsonl_roundtrip_stats",            # §2.1 JSON sink/source round-trip
-    "naive_bayes_langid_confusion",     # learned-classifier inference
-    "streaming_ingest_dedup_stats",     # §2.8 persisted-index digest dedup
-    "streaming_sliding_window_counts",  # §2.8 sliding window
-    "rfm_segment_counts",               # weak r04: driver row + re-time
-    "shard_rebalance_audit",            # weak r04: driver row + re-time
-    "seasonal_residual_anomalies",      # borderline 2.05x r04: watch closed
-    "benford_first_digit_audit",        # stats: first-digit chi-square
-    "gini_concentration",               # stats: exact-cents Gini
-    "deterministic_uniform_sample",     # sampling: portable-hash membership
-    "geo_cell_density",                 # geo: grid binning
-    "dynamic_gap_sessions",             # per-user adaptive session gaps
-    "string_function_battery",          # scalar-function battery rep
-]
-_R5_DEMOTED = {
-    # banked driver-green in 3 rounds (r02+r03+r04):
-    "exact_dedup_documents",            # dedup head keeps simhash_weighted +
-                                        # block_bias + streaming_neardup
-    "simhash_near_dup",                 # ~ simhash_weighted_near_dup survivor
-    "partition_backfill_stats",         # layout ~ zorder/join-cardinality
-                                        # shapes banked; sink tier gets jsonl
-    "ab_welch_ttest",                   # stats tier sends benford + gini
-    "ols_order_value_regression",       # regression shape banked 3 rounds
-    "embedding_dim_profile",            # linalg ~ knn_label_agreement survivor
-    "lpa_communities",                  # graph ~ nation_trade_pagerank survivor
-    # banked r03+r04, shape-covered:
-    "pii_redaction_audit",              # privacy keeps l_diversity_audit
-    "leakproof_customer_split",         # sampling sends deterministic_uniform
-    "geo_hotspot_clusters",             # geo sends geo_cell_density
-    "scd2_user_event_intervals",        # time-series keeps gapfill_locf_hourly
-    "referential_integrity_audit",      # quality ~ expectations_audit survivor
-    "bm25_top_docs",                    # retrieval sends tfidf_top_terms
-    "sequence_packing_stats",           # curation sends padding_waste_audit
-    "mann_whitney_u",                   # rank stats ~ benford/gini promotions
-    "streaming_timeout_sessions",       # streaming sends sliding + both ingest
-                                        # dedups + the composed ELB stream
-    "elb_error_report",                 # ELB surface: the composed pipeline
-                                        # stays AND streams this round
-    "zorder_layout_audit",              # layout banked r03+r04
-    "join_cardinality_estimate",        # layout banked r03+r04
-    "write_audit_publish_stats",        # WAP banked r03+r04
-    "segment_digest_reconcile",         # reconcile banked r03+r04
-    "watermark_lateness_profile",       # streaming-ops banked r03+r04
-    "exact_median_two_pass",            # banked r03+r04 (cache-release change
-                                        # is management-only; plan unchanged)
-    "forget_entity_audit",              # erasure banked r03+r04
-    # banked r04, shape-covered by a promoted sibling:
-    "format_matrix_roundtrip",          # sink round-trip ~ jsonl promotion
-    "vocab_growth_audit",               # profiling ~ gopher battery promotion
-}
-_head5 = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R5_DEMOTED and n not in _R5_PROMOTED
-]
-_rest5 = [n for n in CORE_PREFIX if n not in _head5 and n not in _R5_PROMOTED]
-CORE_PREFIX = _head5 + _R5_PROMOTED + _rest5
-
-# Round-6 rebalance (VERDICT r05 item 1: 125/266 queries still have
-# zero driver rows — keep rotating). 26 promotions: every
-# never-sampled standout the verdict named, the three queries whose
-# oracle/plan CHANGED this round (streaming_stateful_user_totals
-# rows-only→oracle via the batch-invariant final-state projection;
-# doc_fingerprint_summary's NULLIF oracle — the ADVICE r05 medium;
-# elb_error_report rides the IPv6 client_ip guard shared with the
-# pipeline), and never-sampled representatives of tiers whose head
-# reps are all banked (sampling per-group k-sample, union drift,
-# asymmetric-containment dedup, SRM guardrail, forecast backtest,
-# VARIANT ingestion, log-template mining, datetime battery, streaming
-# watermark dedup, SQL-API surface, composed multimodal pipeline).
-# The two restructured ingest-dedup streams (single paced availableNow
-# run, r6) stay in the head unpromoted to RE-verify. Displaced entries
-# are banked driver-green in r4+r5 (or r5 with a same-shape survivor)
-# and every one keeps its local oracle test.
-_R6_PROMOTED = [
-    "incremental_hourly_rollup",        # verdict-named: pins sf1 rounding fix
-    "multimodal_sniff_stats",           # verdict-named
-    "pmi_collocations",                 # verdict-named
-    "cube_status_priority",             # verdict-named
-    "from_json_props_stats",            # verdict-named
-    "asof_next_order_after_event",      # verdict-named
-    "salted_event_mktsegment_join",     # verdict-named
-    "streaming_ohlc_bars",              # verdict-named
-    "k_anonymity_audit",                # verdict-named
-    "cusum_changepoint",                # verdict-named
-    "user_survival_curve",              # verdict-named
-    "cosine_topk_arrow",                # verdict-named
-    "streaming_stateful_user_totals",   # NEW oracle r6 (verdict item 6)
-    "doc_fingerprint_summary",          # oracle fixed r6 (ADVICE medium)
-    "elb_error_report",                 # IPv6 guard r6 (verdict item 7)
-    "per_nation_deterministic_sample",  # sampling: per-group k-sample
-    "schema_drift_union_stats",         # unionByName drift surface
-    "shingle_containment_pairs",        # asymmetric-overlap dedup
-    "srm_balance_audit",                # experiment guardrail
-    "seasonal_naive_backtest",          # forecast backtest spine
-    "variant_props_stats",              # VARIANT ingestion
-    "elb_template_mining",              # log-template mining
-    "datetime_function_battery",        # scalar datetime battery
-    "streaming_dedup_distinct_users",   # dropDuplicatesWithinWatermark
-    "sql_api_region_order_totals",      # spark.sql() API surface
-    "multimodal_pipeline_stats",        # composed multimodal pipeline
-    "exact_dedup_map_payload",          # NEW r6: min_by map-dedup path
-                                        # (verdict item 3 driver-facing)
-    "elb_device_report",                # NEW r6: P11 device axis,
-                                        # table-generated oracle
-]
-_R6_DEMOTED = {
-    # banked driver-green r4+r5, shape-covered by a survivor:
-    "knn_label_agreement",              # ANN shape ~ promoted cosine_topk_arrow
-    "count_min_sketch_audit",           # sketch audit (banked 2 rounds)
-    "nation_trade_pagerank",            # graph (banked 2 rounds)
-    "stratified_sample_audit",          # sampling sends per_nation rep
-    "lateral_top2_customers",           # LATERAL (banked 2 rounds)
-    "expectations_audit",               # data contracts (banked 2 rounds)
-    "training_export_pipeline",         # curation capstone (banked 2 rounds)
-    "gapfill_locf_hourly",              # promoted incremental_hourly_rollup
-                                        # pins the same sf1 rounding fix
-    "cohort_retention_matrix",          # retention (banked 2 rounds)
-    "funnel_view_click_purchase",       # funnel (banked 2 rounds)
-    "dsir_importance_weights",          # curation (banked 2 rounds)
-    "semdedup_survivors",               # curation (banked 2 rounds)
-    "l_diversity_audit",                # privacy sends k_anonymity_audit
-    "column_encryption_roundtrip",      # AES round-trip (banked 2 rounds)
-    "range_lookup_join",                # promoted asof_next_order covers
-                                        # the range-predicate join shape
-    "heavy_hitter_tokens",              # sketches (banked 2 rounds)
-    "simhash_weighted_near_dup",        # near-dup (banked 2 rounds)
-    "simhash_block_bias_audit",         # near-dup (banked 2 rounds)
-    "multimodal_image_resize_stats",    # banked r4+r5; tier sends sniff +
-    "multimodal_audio_frame_features",  # pipeline, keeps pixel/wav/motion
-    "multimodal_video_frame_sample_stats",
-    # banked r5, same-shape survivor stays/promotes:
-    "cosine_topk_lsh",                  # ANN sends cosine_topk_arrow
-    "winnowing_collision_pairs",        # fingerprint tier sends
-                                        # doc_fingerprint_summary
-    "duplicated_span_coverage",         # span dedup (banked r5); dedup
-                                        # tier sends exact_dedup_map_payload
-    "gopher_quality_battery",           # quality battery (banked r5)
-    "benford_first_digit_audit",        # stats battery (banked r5)
-    "rfm_segment_counts",               # banked r5 with the rewrite verified
-    "string_function_battery",          # battery tier sends datetime
-}
-_head6 = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R6_DEMOTED and n not in _R6_PROMOTED
-]
-_rest6 = [n for n in CORE_PREFIX if n not in _head6 and n not in _R6_PROMOTED]
-CORE_PREFIX = _head6 + _R6_PROMOTED + _rest6
-
-# Round-7 rebalance (VERDICT r06 item 1: 101/268 queries still have
-# zero driver rows). 32 promotions: the 13-query generalized TPC-H
-# battery block the verdict led with, every other never-sampled
-# standout it named (dedup_cluster_sizes, simhash_documents,
-# winnowing_fingerprints, recursive_knn_bfs_levels,
-# streaming_wap_publish_stats, knn_clustering_coefficient), the two
-# ADVICE-fix-lineage carriers (item 7: incremental_ingest_dedup —
-# the Hadoop-FS existence probe + the r7 FS-API compaction swap —
-# and simhash_weighted_near_dup), the FOUR queries whose oracle is
-# NEW this round (item 3: synthetic_source_status_counts's
-# materialized-corpus oracle and the three approx twins' rank-error
-# audits), and never-sampled representatives of tiers whose head
-# reps are banked (knn triangles, OHLC batch twin, transition
-# matrix, interval-overlap concurrency, token entropy, stratified
-# sampling, watermark-dedup hourly actives). The three streams whose
-# PLANS changed this round (single paced run / batch_shuffle_
-# partitions: streaming_elb_pipeline_hourly,
-# streaming_neardup_ingest_stats, streaming_ingest_dedup_stats) stay
-# in the head unpromoted to RE-verify, as does elb_device_report
-# (oracle now generated from the classifier's live table). Displaced
-# entries are banked driver-green 2-3 rounds, or r6-green with a
-# same-shape survivor staying/promoting; every one keeps its local
-# oracle test.
-_R7_PROMOTED = [
-    # generalized TPC-H battery (verdict-led block, all never-sampled)
-    "filtered_revenue_simple",          # Q6 shape
-    "returned_items_topk",              # Q10 shape
-    "window_value_functions",           # first/last/nth/lead/lag battery
-    "null_safe_join_battery",           # <=> / IS DISTINCT FROM joins
-    "grouping_sets_customer",           # GROUPING SETS + grouping_id
-    "cheapest_part_per_type_size",      # Q2 min-per-group shape
-    "sole_fault_suppliers",             # Q21 multi-exists shape
-    "priority_exists_orders",           # Q4 EXISTS shape
-    "market_share_ratio",               # Q8 conditional-share shape
-    "high_balance_no_orders",           # Q22 anti-join shape
-    "shipping_priority_topk",           # Q3 shape
-    "top_supplier_by_revenue",          # Q15 max-of-aggregate shape
-    "large_volume_customers",           # Q18 having-join-back shape
-    # dedup / fingerprint tier (verdict-named + item 7 lineage)
-    "dedup_cluster_sizes",              # CC cluster rollup (r7 cc fix kin)
-    "simhash_documents",                # per-doc simhash table
-    "winnowing_fingerprints",           # winnowing fingerprint table
-    "simhash_weighted_near_dup",        # item 7: fixed-finding carrier
-    "incremental_ingest_dedup",         # item 7: FS-probe fix lineage
-    # graph / knn tier
-    "recursive_knn_bfs_levels",         # recursive CTE twin (verdict-named)
-    "knn_clustering_coefficient",       # triangle closure (verdict-named)
-    "supplier_knn_triangles",           # knn triangle counts
-    # streaming tier (never-sampled reps)
-    "streaming_wap_publish_stats",      # WAP manifest swap (verdict-named)
-    "streaming_dedup_hourly_active_users",  # chained stateful ops
-    # time-series tier
-    "ohlc_bars_events",                 # batch OHLC twin
-    "event_transition_matrix",          # Markov transition rollup
-    "max_concurrent_shipments",         # interval-overlap sweep
-    # r7 rows-only -> oracle promotions (item 3 + the two extra
-    # sketch audits, taking the set 13 -> 7; new oracles gate first —
-    # token_entropy_quality / stratified_sample_counts move to r8)
-    "synthetic_source_status_counts",   # materialized-corpus oracle
-    "equi_depth_histogram_orders_approx",  # rank-error audit oracle
-    "iqr_outlier_audit_approx",         # rank-error audit oracle
-    "vocab_growth_audit_approx",        # boundary audit oracle
-    "approx_aggregates_events",         # count-distinct+median audit
-    "hll_sketch_distinct_users",        # HLL union-envelope audit
-]
-_R7_DEMOTED = {
-    # banked driver-green 2-3 rounds:
-    "elb_bot_report",                   # r4+r5+r6; ELB head keeps the
-                                        # pipeline + device report
-    "bloom_decontamination_audit",      # r5+r6
-    "tfidf_top_terms",                  # r5+r6
-    "padding_waste_audit",              # r5+r6
-    "multimodal_pixel_roundtrip_stats", # r5+r6; tier keeps the
-    "multimodal_wav_roundtrip_stats",   # composed pipeline survivor
-    "multimodal_video_motion_stats",    # r5+r6
-    "udtf_token_spans",                 # r5+r6
-    "grouped_agg_pandas_gmean",         # r5+r6
-    "jsonl_roundtrip_stats",            # r5+r6
-    "naive_bayes_langid_confusion",     # r5+r6
-    "streaming_sliding_window_counts",  # r5+r6
-    "shard_rebalance_audit",            # r5+r6
-    "seasonal_residual_anomalies",      # r5+r6
-    "gini_concentration",               # r5+r6
-    "deterministic_uniform_sample",     # r5+r6; sampling sends the
-                                        # never-sampled stratified rep
-    "geo_cell_density",                 # r5+r6
-    "dynamic_gap_sessions",             # r5+r6
-    "streaming_stateful_user_totals",   # r1+r6 (oracle re-verified r6)
-    "elb_error_report",                 # r3+r4+r6 (IPv6 guard re-green)
-    # banked r6 with a same-shape survivor staying or promoting:
-    "multimodal_sniff_stats",           # sniff is stage 1 of the kept
-                                        # multimodal_pipeline_stats
-    "cube_status_priority",             # grouping-set family sends
-                                        # grouping_sets_customer
-    "asof_next_order_after_event",      # as-of twins both green (r4/r6)
-    "salted_event_mktsegment_join",     # join tier sends the null-safe
-                                        # battery; salting plan-pinned
-    "streaming_ohlc_bars",              # batch OHLC twin promotes
-    "seasonal_naive_backtest",          # ts tier sends transition +
-                                        # concurrency reps
-    "variant_props_stats",              # props surface keeps
-                                        # from_json_props_stats
-    "elb_template_mining",              # ELB head keeps pipeline+device
-    "datetime_function_battery",        # battery family banked r5+r6
-    "sql_api_region_order_totals",      # SQL-API surface banked r6
-    "per_nation_deterministic_sample",  # sampling sends stratified rep
-    "schema_drift_union_stats",         # drift banked r6
-}
-_head7 = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R7_DEMOTED and n not in _R7_PROMOTED
-]
-_rest7 = [n for n in CORE_PREFIX if n not in _head7 and n not in _R7_PROMOTED]
-CORE_PREFIX = _head7 + _R7_PROMOTED + _rest7
-
-# Round-7b: five MORE rows-only → oracle promotions landed mid-round
-# (ANN recall audits embedding the exact Arrow scorer, the PCA
-# trace/invariant audit, the BPE lossless-roundtrip audit — rows-only
-# set now 2). New oracles gate first: swap them into the sampled head
-# for r6-green banked entries whose tier keeps a same-shape survivor —
-# cosine_topk_arrow's exact scorer now runs INSIDE all three ANN
-# audits; cusum/survival leave the stats tier with srm_balance_audit
-# + k_anonymity_audit staying; pmi leaves text with the shingle/
-# simhash/winnowing block staying; the hourly rollup leaves
-# incremental with incremental_ingest_dedup + the WAP/dedup streams
-# staying. Every demoted entry keeps its local oracle test.
-_R7B_PROMOTED = [
-    "cosine_topk_ivf",
-    "cosine_topk_pq",
-    "cosine_topk_ivfpq",
-    "embedding_pca_variance",
-    "bpe_encode_stats",
-]
-_R7B_DEMOTED = {
-    "cosine_topk_arrow",        # r6 green; embedded in the ANN audits
-    "cusum_changepoint",        # r6 green; stats keeps srm + k-anon
-    "user_survival_curve",      # r6 green; stats keeps srm + k-anon
-    "pmi_collocations",         # r6 green; text block stays
-    "incremental_hourly_rollup",  # r6 green; incremental reps stay
-}
-_head7b = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R7B_DEMOTED and n not in _R7B_PROMOTED
-]
-_rest7b = [n for n in CORE_PREFIX if n not in _head7b and n not in _R7B_PROMOTED]
-CORE_PREFIX = _head7b + _R7B_PROMOTED + _rest7b
-
-# r8 rotation shortlist (bookkeeping for the next round): after r7's
-# 33 head first-timers land their rows, 68 registry queries will still
-# have zero driver rows. Representative promotions to lead r8 with,
-# one per still-unrowed family: function batteries
-# (array_function_battery, null_handling_battery, regression_battery,
-# listagg_bitwise_battery), text quality (text_quality_scores,
-# langid_confusion, token_entropy_quality, readability_scores),
-# curation (curation_funnel_by_source, dedup_survivor_stats,
-# minhash_calibration, leakage_safe_split_audit), embedding support
-# (dim_truncation_recall, embedding_centroid_drift,
-# embedding_quantization_error, feature_hashing_vectors), stats
-# (ab_conversion_ztest, kruskal_wallis_value_by_type,
-# cuped_adjusted_lift), profiling/layout (column_profile_lineitem,
-# table_content_digest, compaction_binpack_plan,
-# shard_assignment_stats), time-series (time_weighted_avg_users,
-# rolling_distinct_users, activity_bitmap_stats), and the TPC-H
-# long tail (profit_by_nation_year Q9, promo_revenue_ratio Q14,
-# local_supplier_volume Q5, small_qty_order_revenue Q17,
-# disjunctive_bracket_revenue Q19).
-
-# Round-8 rebalance (VERDICT r07 item 1: 68/268 queries still have
-# zero driver rows — the shortlist above, executed). 35 promotions,
-# every one a FIRST-EVER driver row: the full remaining TPC-H long
-# tail (12), the never-sampled function batteries (6), the LLM
-# curation/quality tier the verdict named (pii redaction, quality
-# scores, token entropy, chunking, minhash calibration, stratified
-# sampling, langid confusion), the train/test-contamination audits
-# (item 6: leakage_safe_split_audit — now also property-tested with a
-# planted leak in test_r8_fixes.py — and temporal_embargo_split_audit)
-# plus curation funnel/survivor reps, the session/time tier, and the
-# two r8 rows-only → oracle promotions (item 5: parquet_footer_stats'
-# footer-truthfulness audit, bpe_merge_table's training audit — new
-# oracles gate first). Staying UNPROMOTED to RE-verify are the nine
-# queries whose plans changed this round: the batch + three sized
-# streams (deferred geo fetch, fetch coalesce, AQE-off sized blocks),
-# the three ANN audits (adaptive √N sizing), the PCA audit
-# (decimal-quantized trace) and the BPE encode audit (checkpointed
-# broadcast side) — plus one banked representative per displaced tier
-# (k-anonymity, SRM, multimodal pipeline, map-payload dedup, device
-# report, knn clustering, approx aggregates). Displaced entries are
-# r7-green (or longer) with a same-tier survivor staying or
-# promoting; every one keeps its local oracle test.
-_R8_PROMOTED = [
-    # TPC-H long tail (verdict-led block, all never-sampled)
-    "profit_by_nation_year",            # Q9 shape
-    "nation_pair_volume",               # Q7 shape
-    "local_supplier_volume",            # Q5 shape
-    "promo_revenue_ratio",              # Q14 shape
-    "quarterly_growth_by_priority",     # windowed growth
-    "supplier_variety_by_part",         # Q16 shape
-    "cube_priority_status",             # CUBE
-    "excess_volume_suppliers",          # Q20 shape
-    "important_parts_value_threshold",  # Q11 shape
-    "shipment_priority_buckets",        # Q12 shape
-    "small_qty_order_revenue",          # Q17 shape
-    "disjunctive_bracket_revenue",      # Q19 shape
-    # function batteries
-    "array_function_battery",
-    "null_handling_battery",
-    "listagg_bitwise_battery",
-    "map_struct_event_stats",
-    "posexplode_ordinal_tokens",
-    "unpivot_order_status_counts",
-    # LLM curation / quality tier
-    "pii_redaction_stats",
-    "text_quality_scores",
-    "token_entropy_quality",
-    "doc_chunking_stats",
-    "minhash_calibration",
-    "stratified_sample_counts",
-    "langid_confusion",
-    # train/test split audits (item 6) + curation reps
-    "leakage_safe_split_audit",
-    "temporal_embargo_split_audit",
-    "curation_funnel_by_source",
-    "dedup_survivor_stats",
-    # session / time tier
-    "batch_session_window_stats",
-    "rolling_distinct_users",
-    "time_weighted_avg_users",
-    # r8 rows-only -> oracle promotions (item 5; new oracles gate first)
-    "parquet_footer_stats",
-    "bpe_merge_table",
-    # r8 NEW operator + oracle (IVFADC+R exact re-rank; gates first)
-    "cosine_topk_ivfpq_rerank",
-]
-_R8_DEMOTED = {
-    # r7-green (or longer), tier survivor staying/promoting:
-    "from_json_props_stats",            # JSON tier banked r2+r7
-    "doc_fingerprint_summary",          # fingerprint tier banked r7
-    "shingle_containment_pairs",        # near-dup tier banked r7
-    "streaming_dedup_distinct_users",   # streaming dedup banked r5-r7
-    # TPC-H generalized battery banked r7; tier sends 12 NEW shapes:
-    "filtered_revenue_simple",
-    "returned_items_topk",
-    "window_value_functions",
-    "null_safe_join_battery",
-    "grouping_sets_customer",           # cube_priority_status promotes
-    "cheapest_part_per_type_size",
-    "sole_fault_suppliers",
-    "priority_exists_orders",
-    "market_share_ratio",
-    "high_balance_no_orders",
-    "shipping_priority_topk",
-    "top_supplier_by_revenue",
-    "large_volume_customers",
-    # dedup/fingerprint tier banked r7; map-payload + minhash
-    # calibration cover the tier:
-    "dedup_cluster_sizes",
-    "simhash_documents",
-    "winnowing_fingerprints",
-    "simhash_weighted_near_dup",
-    "incremental_ingest_dedup",         # ingest-dedup stream stays
-    # graph tier keeps knn_clustering_coefficient:
-    "recursive_knn_bfs_levels",
-    "supplier_knn_triangles",
-    # graph rep banked r7 (makes room for the new rerank oracle):
-    "knn_clustering_coefficient",
-    # streaming tier keeps the three plan-changed streams:
-    "streaming_wap_publish_stats",
-    "streaming_dedup_hourly_active_users",
-    # time-series tier sends rolling/time-weighted/session reps:
-    "ohlc_bars_events",
-    "event_transition_matrix",
-    "max_concurrent_shipments",
-    # r7 oracle promotions banked r7; approx_aggregates_events stays:
-    "synthetic_source_status_counts",
-    "equi_depth_histogram_orders_approx",
-    "iqr_outlier_audit_approx",
-    "vocab_growth_audit_approx",
-    "hll_sketch_distinct_users",
-}
-_head8 = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R8_DEMOTED and n not in _R8_PROMOTED
-]
-_rest8 = [n for n in CORE_PREFIX if n not in _head8 and n not in _R8_PROMOTED]
-CORE_PREFIX = _head8 + _R8_PROMOTED + _rest8
-
-# r9 rotation (VERDICT r08 item 1): promote ALL 34 never-sampled
-# registry queries — the exact set computed by unioning
-# CORRECTNESS_r01..r08 keys against all_queries() (it matches the
-# judge's computed never-checked set). After this round lands its
-# rows, every one of the 269 registry queries has a driver-green
-# CORRECTNESS row at least once — the full-coverage milestone.
-# Holdovers (16) are the plan-changed queries that must re-verify
-# this round (streaming_elb_pipeline_hourly: per-batch plan-template
-# restructure; cosine_topk_ivf/pq/ivfpq/_rerank: n_probe sizing +
-# plan-identity truncation fix; bpe_merge_table: n_merges_ok oracle;
-# streaming_*_ingest_stats: sized-conf restore fix path) plus the
-# flagship and one banked representative per tier.
-_R9_PROMOTED = [
-    # embedding support
-    "dim_truncation_recall",
-    "embedding_centroid_drift",
-    "embedding_quantization_error",
-    "feature_hashing_vectors",
-    "nearest_dc_assignment",
-    # stats / experimentation
-    "ab_conversion_ztest",
-    "kruskal_wallis_value_by_type",
-    "cuped_adjusted_lift",
-    "mad_outlier_census",
-    "stat_moments_by_returnflag",
-    "multi_horizon_backtest",
-    "regression_battery",
-    # profiling / layout
-    "column_profile_lineitem",
-    "table_content_digest",
-    "compaction_binpack_plan",
-    "shard_assignment_stats",
-    "uniqueness_violations",
-    "skew_profile_events",
-    "equi_depth_histogram_orders",
-    "iqr_outlier_audit",
-    # text quality
-    "readability_scores",
-    "token_diversity_flags",
-    "bigram_repetition_flags",
-    "doc_length_histogram",
-    "fuzzy_name_match_stats",
-    "token_explode_topk",
-    # sampling / mixing
-    "weighted_sample_audit",
-    "deterministic_split_counts",
-    "source_mixing_weights",
-    "mixture_rebalance_weights",
-    "association_rules_parts",
-    # session / plan-hints
-    "session_relative_features",
-    "activity_bitmap_stats",
-    "hinted_join_strategies",
-]
-_R9_DEMOTED = {
-    # every demotion is r8-green (CORRECTNESS_r08 full pass) and its
-    # tier keeps a surviving representative in the head or sends one
-    # via _R9_PROMOTED:
-    "bpe_encode_stats",                 # bpe tier: bpe_merge_table stays
-    "profit_by_nation_year",            # TPC-H tier banked r8
-    "nation_pair_volume",
-    "local_supplier_volume",
-    "promo_revenue_ratio",
-    "quarterly_growth_by_priority",
-    "supplier_variety_by_part",
-    "cube_priority_status",
-    "excess_volume_suppliers",
-    "important_parts_value_threshold",
-    "shipment_priority_buckets",
-    "small_qty_order_revenue",
-    "disjunctive_bracket_revenue",
-    "array_function_battery",           # batteries banked r8
-    "null_handling_battery",
-    "listagg_bitwise_battery",
-    "map_struct_event_stats",
-    "posexplode_ordinal_tokens",
-    "unpivot_order_status_counts",
-    "pii_redaction_stats",              # quality tier sends 6 new reps
-    "text_quality_scores",
-    "token_entropy_quality",
-    "doc_chunking_stats",
-    "minhash_calibration",
-    "stratified_sample_counts",         # sampling tier sends 5 new reps
-    "langid_confusion",
-    "leakage_safe_split_audit",
-    "temporal_embargo_split_audit",
-    "curation_funnel_by_source",
-    "dedup_survivor_stats",
-    "batch_session_window_stats",       # session tier sends new reps
-    "rolling_distinct_users",
-    "time_weighted_avg_users",
-    "parquet_footer_stats",             # layout tier sends 8 new reps
-}
-_head9 = [
-    n for n in CORE_PREFIX[:50]
-    if n not in _R9_DEMOTED and n not in _R9_PROMOTED
-]
-_rest9 = [n for n in CORE_PREFIX if n not in _head9 and n not in _R9_PROMOTED]
-CORE_PREFIX = _head9 + _R9_PROMOTED + _rest9
-
-# ---- r10 rotation (VERDICT r9 item 1: freshness, not coverage) ----
-# The registry is fully driver-sampled after r9, so from here the
-# head-50 is a freshness rotation. scripts/driver_staleness.py prints
-# the ledger this list was built from (per-query last driver round).
-# Composition: (a) queries whose plan/oracle changed in r10 — the BPE
-# oracle gained the independent n_multi_words column, the streaming
-# pipeline tick and its batch twin changed with the finalize work,
-# the IVF pair gained the bucketed serving layout; (b) ALL 36 queries
-# whose latest driver row was r1/r2; (c) the stalest r3 rows to fill
-# 50 (incl. the §2-core revenue_by_nation / sessionize_events /
-# pricing_summary the r9 verdict called out by name).
-_R10_HEAD = [
-    # (a) plan/oracle changed this round
-    "bpe_merge_table",
-    "streaming_elb_pipeline_hourly",
-    "elb_pipeline_hourly",
-    "cosine_topk_ivf",
-    "cosine_topk_ivf_bucketed",
-    # (b) last driver row r1
-    "chunk_dedup_stats",
-    "cross_join_region_priority",
-    "decontamination_overlap",
-    "event_neighbors",
-    "events_within_5min_pairs",
-    "hierarchical_time_rollup",
-    "json_extract_events",
-    "orders_above_customer_avg",
-    "set_ops_customer_cohorts",
-    "status_bucket_case_when",
-    "token_budget_topp",
-    "top_tokens_wordcount",
-    "unigram_logprob_quality",
-    "user_activity_calendar",
-    "value_percentiles_by_type",
-    # (b) last driver row r2
-    "cogroup_user_activity",
-    "customer_order_distribution",
-    "customers_without_orders_anti_join",
-    "event_lag_diff",
-    "extreme_events_by_type",
-    "full_outer_nation_presence",
-    "large_orders_having",
-    "latest_event_per_user",
-    "minhash_lsh_near_dup",
-    "order_priority_semi_join",
-    "pivot_event_type_counts",
-    "promo_revenue_disjunctive_filter",
-    "rolling_1h_avg_value",
-    "rolling_5min_event_count",
-    "rollup_acctbal_by_region_nation",
-    "running_order_total",
-    "salted_user_event_totals",
-    "streaming_view_purchase_join",
-    "token_count_documents",
-    "top_orders_by_revenue",
-    "zscore_outlier_events_builtin",
-    # (c) stalest r3 fill
-    "revenue_by_nation",
-    "sessionize_events",
-    "pricing_summary",
-    "asof_latest_order_before_event",
-    "bucketed_join_agg",
-    "chi_square_independence",
-    "cosine_topk_bruteforce",
-    "hourly_event_aggregate",
-    "incremental_join_rollup",
-]
-_rest10 = [n for n in CORE_PREFIX if n not in set(_R10_HEAD)]
-CORE_PREFIX = _R10_HEAD + _rest10
-
-# ---- r11 rotation (VERDICT r10 item 2: verification debt first) ----
-# Composition, from scripts/driver_staleness.py at the r10 close:
-# (a) every query whose plan/semantics-preserving structure changed in
-#     r10 or r11 without a driver row yet — the 15 r10 restructures the
-#     VERDICT names, plus the r11-touched elb fixture trio (shared geo
-#     cache), forget_entity_audit (6→4 scans), exact_median_two_pass
-#     (one-job-per-level steering) and the streaming tick;
-# (b) ALL 16 remaining r3-stale rows; (c) 16 of the 20 remaining
-#     r4-stale rows. The 4 r4 rows left at staleness 7 — ab_welch_ttest,
-#     ols_order_value_regression, bm25_top_docs, embedding_dim_profile —
-#     each belong to a tier with at least one r11-sampled sibling
-#     (cuped/mann-whitney/kruskal; dim_truncation_recall +
-#     embedding_near_dup_pairs) and are untouched since their last green
-#     row; 19 + 31 is all a 50-slot head holds.
-_R11_HEAD = [
-    # (a) r10/r11 plan-touched, driver verification debt
     "exact_median_two_pass",
     "forget_entity_audit",
     "temporal_embargo_split_audit",
@@ -1821,7 +832,6 @@ _R11_HEAD = [
     "value_drift_audit",
     "watermark_lateness_profile",
     "hll_sketch_distinct_users",
-    # (b) last driver row r3
     "embedding_near_dup_pairs",
     "ewma_control_chart",
     "mergeable_histogram_quantiles",
@@ -1837,7 +847,6 @@ _R11_HEAD = [
     "streaming_view_purchase_outer",
     "top3_customers_per_nation",
     "zscore_outlier_events",
-    # (c) last driver row r4 (16 of 20)
     "exact_dedup_documents",
     "format_matrix_roundtrip",
     "geo_hotspot_clusters",
@@ -1855,22 +864,16 @@ _R11_HEAD = [
     "write_audit_publish_stats",
     "zorder_layout_audit",
 ]
-_rest11 = [n for n in CORE_PREFIX if n not in set(_R11_HEAD)]
-CORE_PREFIX = _R11_HEAD + _rest11
-
-# r12 rotation shortlist (bookkeeping for any future round): rebuild
-# from scripts/driver_staleness.py — (a) plan-changed queries first,
-# (b) the 4 r4 rows left above, then the r5 cohort (benford, cohort_
-# retention, column_encryption, cosine_topk_lsh, count_min, ...). Do
-# not add registry queries unless promoted same-round.
 
 
 def _ordered_specs() -> list[QuerySpec]:
-    """CORE_PREFIX first, then remaining oracle-backed queries in
-    registration order, then rows-only queries last."""
+    """CORE_PREFIX first, then the remaining oracle-backed queries by
+    name, then rows-only queries by name. Sorting by name, not by
+    registration order, keeps the order the same whichever registry
+    module is imported first."""
     prefix = [REGISTRY[n] for n in CORE_PREFIX if n in REGISTRY]
     seen = set(CORE_PREFIX)
-    rest = [s for n, s in REGISTRY.items() if n not in seen]
+    rest = [REGISTRY[n] for n in sorted(REGISTRY) if n not in seen]
     return (
         prefix
         + [s for s in rest if s.sql is not None]

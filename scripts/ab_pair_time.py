@@ -15,49 +15,8 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
-import sys
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, sys.argv[5])
-from elb_log_etl_enrichment_spark.plans.queries import REGISTRY, all_queries
-from elb_log_etl_enrichment_spark.session import get_spark
-name, sf_dir, cpus, warm = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
-all_queries()
-spark = get_spark(app_name="ab-" + name, master="local[" + cpus + "]")
-spark.sparkContext.setLogLevel("ERROR")
-times = []
-for _ in range(warm + 1):
-    t0 = time.perf_counter()
-    REGISTRY[name].fn(spark, sf_dir).count()
-    times.append(round(time.perf_counter() - t0, 3))
-print("AB_JSON:" + json.dumps(times), flush=True)
-spark.stop()
-"""
-
-
-def run_one(root: str, name: str, sf_dir: str, cpus: str, warm: int) -> list[float]:
-    out = subprocess.run(
-        [sys.executable, "-c", _CHILD, name, sf_dir, cpus, str(warm), root],
-        capture_output=True,
-        text=True,
-        cwd=root,
-        timeout=600,
-    )
-    for line in out.stdout.splitlines():
-        if line.startswith("AB_JSON:"):
-            return json.loads(line[len("AB_JSON:"):])
-    raise RuntimeError(f"{name}@{root}: no result\n{out.stderr[-2000:]}")
-
-
-def load1() -> float:
-    try:
-        return os.getloadavg()[0]
-    except Exception:
-        return -1.0
+from fresh_jvm import load1, time_query
 
 
 def main() -> None:
@@ -73,22 +32,21 @@ def main() -> None:
     results = {}
     for name in args.names:
         l0 = load1()
-        try:
-            old = run_one(args.old, name, sf_dir, cpus, args.warm)
-            new = run_one(REPO_ROOT, name, sf_dir, cpus, args.warm)
-        except Exception as e:
-            print(f"{name}: ERR {e}", flush=True)
+        old = time_query(name, sf_dir, cpus, args.warm, root=args.old, timeout=600)
+        new = old and time_query(name, sf_dir, cpus, args.warm, timeout=600)
+        if not new:
+            print(f"{name}: ERR no result", flush=True)
             continue
         s_old, s_new = min(old[1:]), min(new[1:])
         ratio = s_new / s_old if s_old else float("nan")
         results[name] = {
             "old_runs": old, "new_runs": new,
             "old_steady": s_old, "new_steady": s_new,
-            "ratio": round(ratio, 3), "load1_at_start": round(l0, 2),
+            "ratio": round(ratio, 3), "load1_at_start": l0,
         }
         print(
             f"{name}: old {s_old:.2f}s -> new {s_new:.2f}s "
-            f"(x{ratio:.2f}, cold {old[0]:.1f}->{new[0]:.1f}, load1 {l0:.2f})",
+            f"(x{ratio:.2f}, cold {old[0]:.1f}->{new[0]:.1f}, load1 {l0})",
             flush=True,
         )
     with open(args.out, "w") as fh:

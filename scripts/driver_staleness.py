@@ -8,6 +8,26 @@ hash pass). The driver samples the FIRST 50 entries of
 ledger: any query whose last driver row is many rounds old should be
 rotated back into the head.
 
+How the head is composed. ``plans/queries.py`` holds the head as one
+literal, ``CORE_PREFIX`` (50 oracle-backed names); every other query
+follows it sorted by name, oracle-backed before rows-only. Each round
+the head is rebuilt from scratch, not patched:
+
+1. queries whose plan changed this round (or last round, without a
+   driver row since) go first: they carry verification debt;
+2. the remaining slots take the stalest rows of this ledger, oldest
+   last-driver round first.
+
+The r11 head is 19 plan-changed queries, all 16 r3-stale rows and 16
+of the 20 r4-stale rows. Shortlist for the next rebuild, after that
+round's plan-changed queries: the four r4 rows left out,
+``ab_welch_ttest``, ``ols_order_value_regression``, ``bm25_top_docs``
+and ``embedding_dim_profile``, then the r5 cohort
+(``benford_first_digit_audit``, ``cohort_retention_matrix``,
+``column_encryption_roundtrip``, ``cosine_topk_lsh``,
+``count_min_sketch_audit``, ... as ``--stale 6`` lists them). Add no
+registry query unless it is promoted into the head in the same round.
+
 Usage:
     python scripts/driver_staleness.py            # table, stalest first
     python scripts/driver_staleness.py --stale 5  # only >=5 rounds stale

@@ -5,7 +5,10 @@ times cold + N warm materializations (same `.count()` action as
 bench.py, or the noop sink with --noop), then parses the event log and
 prints, per job/stage of the LAST run: duration, task count, shuffle
 read/write bytes, input bytes and spill — the numbers the Spark UI
-would show, without the UI.
+would show, without the UI. The event log is read with
+``perfbench.eventlog``; its spill column counts memory and disk spill
+both (disk spill was not counted before), and its task count is the
+number of finished tasks of the stage.
 
 Usage:
     python scripts/profile_query.py <query> [--warm 2] [--noop]
@@ -15,13 +18,19 @@ Usage:
 from __future__ import annotations
 
 import argparse
-import json
 import os
+import shutil
 import sys
 import time
 
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
+
+from perfbench.eventlog import (  # noqa: E402
+    find_event_log,
+    read_event_log,
+    stages_in_window,
+)
 
 
 def main() -> None:
@@ -68,80 +77,21 @@ def main() -> None:
     print(f"{args.name}: cold {runs[0]} s; warm {runs[1:]}")
 
     spark.stop()
-    # parse the event log for the LAST run's window
-    logs = [os.path.join(evdir, f) for f in os.listdir(evdir)]
-    path = max(logs, key=os.path.getmtime)
-    if os.path.isdir(path):  # eventlog v2 writes a directory
-        inner = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.startswith("events")
-        ]
-        path = max(inner, key=os.path.getmtime)
-    lo, hi = marks[-1]
-    stages = {}
-    jobs = []
-    for line in open(path):
-        try:
-            ev = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        k = ev.get("Event")
-        if k == "SparkListenerStageCompleted":
-            si = ev["Stage Info"]
-            sub = si.get("Submission Time")
-            if sub is None or not (lo <= sub <= hi):
-                continue
-            stages[si["Stage ID"]] = {
-                "name": si["Stage Name"].split("\n")[0][:70],
-                "ms": si.get("Completion Time", 0) - sub,
-                "tasks": si["Number of Tasks"],
-            }
-        elif k == "SparkListenerTaskEnd":
-            sid = ev["Stage ID"]
-            tm = ev.get("Task Metrics") or {}
-            st = stages.get(sid)
-            if st is None:
-                continue
-            st["in_mb"] = st.get("in_mb", 0) + (
-                tm.get("Input Metrics", {}).get("Bytes Read", 0) / 1e6
-            )
-            st["sr_mb"] = st.get("sr_mb", 0) + (
-                (tm.get("Shuffle Read Metrics", {}).get("Local Bytes Read", 0)
-                 + tm.get("Shuffle Read Metrics", {}).get("Remote Bytes Read", 0)) / 1e6
-            )
-            st["sw_mb"] = st.get("sw_mb", 0) + (
-                tm.get("Shuffle Write Metrics", {}).get("Shuffle Bytes Written", 0) / 1e6
-            )
-            st["fetch_ms"] = st.get("fetch_ms", 0) + tm.get(
-                "Shuffle Read Metrics", {}
-            ).get("Fetch Wait Time", 0)
-            st["gc_ms"] = st.get("gc_ms", 0) + tm.get("JVM GC Time", 0)
-            st["cpu_ms"] = st.get("cpu_ms", 0) + tm.get(
-                "Executor CPU Time", 0
-            ) / 1e6
-            st["spill_mb"] = st.get("spill_mb", 0) + (
-                tm.get("Memory Bytes Spilled", 0) / 1e6
-            )
-        elif k == "SparkListenerJobEnd":
-            jobs.append(ev["Job ID"])
-    # task-end events may arrive for stages outside the window; drop
-    # zero-duration leftovers
-    total = sum(s["ms"] for s in stages.values())
+    log = read_event_log(find_event_log(evdir))
+    stages = stages_in_window(log, *marks[-1])
+    total = sum(st.duration_ms for st in stages)
     print(f"\nlast-run stages (sum {total} ms across {len(stages)} stages):")
     print(f"{'stage':>5} {'ms':>7} {'tasks':>5} {'cpu_ms':>8} {'gc':>5} "
           f"{'in_MB':>8} {'sr_MB':>8} {'sw_MB':>8} {'fetch':>5} {'spill':>6}  name")
-    for sid in sorted(stages, key=lambda s: -stages[s]["ms"]):
-        s = stages[sid]
+    for st in sorted(stages, key=lambda st: -st.duration_ms):
+        c = st.counters
         print(
-            f"{sid:>5} {s['ms']:>7} {s['tasks']:>5} "
-            f"{s.get('cpu_ms', 0):>8.0f} {s.get('gc_ms', 0):>5} "
-            f"{s.get('in_mb', 0):>8.2f} {s.get('sr_mb', 0):>8.2f} "
-            f"{s.get('sw_mb', 0):>8.2f} {s.get('fetch_ms', 0):>5} "
-            f"{s.get('spill_mb', 0):>6.1f}  {s['name']}"
+            f"{st.stage_id:>5} {st.duration_ms:>7} {c.tasks:>5} "
+            f"{c.exec_cpu_s * 1e3:>8.0f} {c.gc_s * 1e3:>5.0f} "
+            f"{c.input_mb:>8.2f} {c.shuffle_read_mb:>8.2f} "
+            f"{c.shuffle_write_mb:>8.2f} {c.fetch_wait_s * 1e3:>5.0f} "
+            f"{c.spill_mb:>6.1f}  {st.name[:70]}"
         )
-    import shutil
-
     shutil.rmtree(evdir, ignore_errors=True)
 
 

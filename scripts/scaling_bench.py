@@ -27,10 +27,9 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
-import sys
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from fresh_jvm import REPO_ROOT, git_head, load1, steady_record, time_query
+
 OUT_PATH = os.path.join(REPO_ROOT, "BENCH.scaling.json")
 
 #: default subset: data-proportional, shuffle/compute-heavy paths (the
@@ -50,57 +49,6 @@ DEFAULT_QUERIES = [
     "naive_bayes_langid_confusion",  # token explode + scoring join
 ]
 
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, %(repo)r)
-from elb_log_etl_enrichment_spark.plans.queries import REGISTRY, all_queries
-from elb_log_etl_enrichment_spark.session import get_spark
-name, sf_dir, cpus, warm = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
-all_queries()
-spark = get_spark(app_name="scale-" + name, master="local[" + cpus + "]")
-spark.sparkContext.setLogLevel("ERROR")
-times = []
-for _ in range(warm + 1):
-    t0 = time.perf_counter()
-    REGISTRY[name].fn(spark, sf_dir).count()
-    times.append(round(time.perf_counter() - t0, 3))
-print("SCALE_JSON:" + json.dumps(times), flush=True)
-spark.stop()
-"""
-
-
-def _git_head() -> str:
-    try:
-        return subprocess.run(
-            ["git", "rev-parse", "--short", "HEAD"],
-            cwd=REPO_ROOT, capture_output=True, text=True, check=True,
-        ).stdout.strip()
-    except Exception:
-        return "unknown"
-
-
-def _load1() -> float | None:
-    try:
-        return round(os.getloadavg()[0], 2)
-    except OSError:
-        return None
-
-
-def _run_child(name: str, sf_dir: str, cpus: str, warm: int) -> dict | None:
-    proc = subprocess.run(
-        [sys.executable, "-c", _CHILD % {"repo": REPO_ROOT},
-         name, sf_dir, cpus, str(warm)],
-        capture_output=True, text=True, cwd=REPO_ROOT,
-    )
-    for line in proc.stdout.splitlines():
-        if line.startswith("SCALE_JSON:"):
-            times = json.loads(line[len("SCALE_JSON:"):])
-            return {"cold": times[0], "warm": times[1:],
-                    "steady": min(times[1:])}
-    sys.stderr.write(f"{name}@{cpus}c: child failed\n{proc.stderr[-2000:]}\n")
-    return None
-
-
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*", default=None)
@@ -119,7 +67,7 @@ def main() -> None:
     cpu_list = sorted(
         (c.strip() for c in args.cpus.split(",")), key=int
     )
-    commit = _git_head()
+    commit = git_head()
 
     book: dict = {}
     if os.path.exists(OUT_PATH):
@@ -127,13 +75,13 @@ def main() -> None:
             book = json.load(fh)
     for name in names:
         rec = {"sf_dir": args.sf_dir, "commit": commit,
-               "load1": _load1(), "cpus": {}}
+               "load1": load1(), "cpus": {}}
         # low/high back-to-back per query so both sides share ambient
         for cpus in cpu_list:
-            r = _run_child(name, args.sf_dir, cpus, args.warm)
-            if r is None:
+            times = time_query(name, args.sf_dir, cpus, args.warm)
+            if times is None:
                 continue
-            rec["cpus"][cpus] = r
+            rec["cpus"][cpus] = steady_record(times)
         if len(rec["cpus"]) == len(cpu_list) >= 2:
             lo, hi = cpu_list[0], cpu_list[-1]
             s_lo, s_hi = rec["cpus"][lo]["steady"], rec["cpus"][hi]["steady"]

@@ -23,58 +23,18 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import subprocess
 import sys
 
-REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+from fresh_jvm import REPO_ROOT, git_head, steady_record, time_query
+from fresh_jvm import load1 as sample_load1
+
 OUT_PATH = os.path.join(REPO_ROOT, "BENCH.steady.json")
-
-#: child body: one query, one fresh JVM, cold + K warm materializations
-_CHILD = r"""
-import json, sys, time
-sys.path.insert(0, %(repo)r)
-from elb_log_etl_enrichment_spark.plans.queries import REGISTRY, all_queries
-from elb_log_etl_enrichment_spark.session import get_spark
-name, sf_dir, cpus, warm = sys.argv[1], sys.argv[2], sys.argv[3], int(sys.argv[4])
-all_queries()
-spark = get_spark(app_name="steady-" + name, master="local[" + cpus + "]")
-spark.sparkContext.setLogLevel("ERROR")
-times = []
-for _ in range(warm + 1):
-    t0 = time.perf_counter()
-    REGISTRY[name].fn(spark, sf_dir).count()
-    times.append(round(time.perf_counter() - t0, 3))
-print("STEADY_JSON:" + json.dumps(times), flush=True)
-spark.stop()
-"""
-
-
-def _git_head() -> str:
-    try:
-        return (
-            subprocess.run(
-                ["git", "rev-parse", "--short", "HEAD"],
-                cwd=REPO_ROOT,
-                capture_output=True,
-                text=True,
-                check=True,
-            ).stdout.strip()
-        )
-    except Exception:
-        return "unknown"
 
 
 def _top_from_bench(n: int) -> list[str]:
     with open(os.path.join(REPO_ROOT, "BENCH.local.json")) as fh:
         timings = json.load(fh)["queries"]
     return [k for k, _ in sorted(timings.items(), key=lambda kv: -kv[1])[:n]]
-
-
-def _sample_load1() -> float | None:
-    try:
-        return round(os.getloadavg()[0], 2)
-    except OSError:
-        return None
 
 
 def _wait_for_calm(calm: float, budget_s: float) -> float | None:
@@ -84,32 +44,12 @@ def _wait_for_calm(calm: float, budget_s: float) -> float | None:
     AND a misleading number, while a 10 s sleep costs only the sleep."""
     import time
 
-    load1 = _sample_load1()
+    load1 = sample_load1()
     deadline = time.time() + budget_s
     while load1 is not None and load1 >= calm and time.time() < deadline:
         time.sleep(10)
-        load1 = _sample_load1()
+        load1 = sample_load1()
     return load1
-
-
-def _run_child(name: str, sf_dir: str, cpus: str, warm: int) -> dict | None:
-    proc = subprocess.run(
-        [sys.executable, "-c", _CHILD % {"repo": REPO_ROOT},
-         name, sf_dir, cpus, str(warm)],
-        capture_output=True,
-        text=True,
-        cwd=REPO_ROOT,
-    )
-    for line in proc.stdout.splitlines():
-        if line.startswith("STEADY_JSON:"):
-            times = json.loads(line[len("STEADY_JSON:"):])
-            return {
-                "cold": times[0],
-                "warm": times[1:],
-                "steady": min(times[1:]),
-            }
-    sys.stderr.write(f"{name}: child failed\n{proc.stderr[-2000:]}\n")
-    return None
 
 
 def retime(
@@ -136,9 +76,10 @@ def retime(
     recs: list[dict] = []
     for attempt in range(1, attempts + 1):
         load1 = _wait_for_calm(calm, calm_wait)
-        rec = _run_child(name, sf_dir, cpus, warm)
-        if rec is None:
+        times = time_query(name, sf_dir, cpus, warm)
+        if times is None:
             continue
+        rec = steady_record(times)
         rec["load1"] = load1
         recs.append(rec)
         if load1 is not None and load1 < calm:
@@ -219,7 +160,7 @@ def main() -> None:
     if os.path.exists(args.out):
         with open(args.out) as fh:
             book = json.load(fh)
-    sha = _git_head()
+    sha = git_head()
     for name in names:
         rec = retime(
             name, sf_dir, cpus, args.warm,

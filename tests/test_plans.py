@@ -240,10 +240,11 @@ def test_approx_percentile_twins_track_exact(spark):
 
 
 def test_registry_prefix_is_oracle_backed_and_complete(spark):
-    """Driver-sampling triage (VERDICT r01 item 8): every CORE_PREFIX
-    name must exist and be oracle-backed; the first 50 returned by
-    all_queries() must be exactly oracle-backed queries; rows-only
-    queries must all sort after every oracle-backed one."""
+    """Driver-sampling triage (VERDICT r01 item 8): CORE_PREFIX is the
+    driver's whole 50-name head; every name in it must exist and be
+    oracle-backed; the first 50 returned by all_queries() must be
+    exactly oracle-backed queries; rows-only queries must all sort
+    after every oracle-backed one."""
     from elb_log_etl_enrichment_spark.plans.queries import (
         CORE_PREFIX,
         REGISTRY,
@@ -255,6 +256,7 @@ def test_registry_prefix_is_oracle_backed_and_complete(spark):
     osql = all_oracle_sql()
     missing = [n for n in CORE_PREFIX if n not in REGISTRY]
     assert not missing, missing
+    assert len(CORE_PREFIX) == 50
     assert names[: len(CORE_PREFIX)] == CORE_PREFIX
     assert all(n in osql for n in names[:50]), [n for n in names[:50] if n not in osql]
     first_rows_only = next(
@@ -262,6 +264,37 @@ def test_registry_prefix_is_oracle_backed_and_complete(spark):
     )
     assert all(n not in osql for n in names[first_rows_only:])
     assert len(names) == len(set(names)) == len(REGISTRY)
+
+
+def test_registry_order_is_independent_of_import_order():
+    """``all_queries()`` must return the same order whichever registry
+    module is imported first: the tail after CORE_PREFIX is sorted by
+    name, not by registration order. Each child interpreter only
+    imports modules; no JVM starts."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = (
+        "import importlib, json, sys\n"
+        "for m in sys.argv[1:]:\n"
+        "    importlib.import_module('elb_log_etl_enrichment_spark.plans.' + m)\n"
+        "from elb_log_etl_enrichment_spark.plans.queries import all_queries\n"
+        "print(json.dumps(list(all_queries())))\n"
+    )
+
+    def names(*first):
+        out = subprocess.run(
+            [sys.executable, "-c", child, *first],
+            cwd=root, capture_output=True, text=True, check=True,
+        ).stdout
+        return json.loads(out)
+
+    plain = names()
+    assert len(plain) == len(set(plain)) > 50
+    assert names("queries_stats", "queries_privacy") == plain
 
 
 def test_salted_join_spreads_hot_key_and_matches_plain_join(spark):
